@@ -1681,11 +1681,11 @@ def main() -> int:
     # records how many merged probes actually served the herd.
     from cs598vectordb_spark.operators.serving import (
         DynamicBatcher,
-        layered2_probe_fn,
+        probe_fn_for,
     )
 
-    probe_b = layered2_probe_fn(
-        spark, lb1m_g2s, k=10, nprobe1=6, nprobe2=10, beam=32,
+    probe_b = probe_fn_for(
+        spark, "graph2", lb1m_g2s, k=10, nprobe1=6, nprobe2=10, beam=32,
         rounds=4, n_entry=12,
     )
     qpdf_mt = q_mt.toPandas()
@@ -1710,10 +1710,8 @@ def main() -> int:
     # r14 item 4): the reference's multi-tenant experiment spans
     # backends; the batching remedy must too. Same 50-tenant herd,
     # one merged fused probe of the 1M list-partitioned index.
-    from cs598vectordb_spark.operators.serving import ivfpq_probe_fn
-
-    probe_bi = ivfpq_probe_fn(
-        spark, lb1m_idx, lb1m, k=10, nprobe=8, mult=10
+    probe_bi = probe_fn_for(
+        spark, "ivfpq", lb1m_idx, lb1m, k=10, nprobe=8, mult=10
     )
     probe_bi(qpdf_mt)  # warm the merged-probe path once
     # the fused family's measured batching knee (r17,
@@ -1764,8 +1762,6 @@ def main() -> int:
         build_layered_graph,
         knn_graph_layered,
     )
-    from cs598vectordb_spark.operators.serving import probe_fn_for
-
     t0 = time.time()
     lb1m_sq8 = build_layered_graph(lb1m, nlist=1024, degree=16, compress=True)
     sq8_build_s = round(time.time() - t0, 1)

@@ -34,14 +34,23 @@ recall floors are pinned in tests (≥0.7 bar, BASELINE.md's Annoy floor).
 from __future__ import annotations
 
 import os
-import threading
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
 from cs598vectordb_spark.functions.distance import squared_l2
+from cs598vectordb_spark.operators.ivf2 import select_sublists
+from cs598vectordb_spark.operators.knn import (
+    nearest_lists,
+    pooled_broadcast,
+    probers_by_list,
+    query_block,
+    rank_topk,
+    topk_canonical_idx,
+)
 
 _ROLL_MOD = 1_000_000_007
 
@@ -145,7 +154,6 @@ def build_knn_graph_partitioned(
     Reference analog: FAISS builds its HNSW in seconds in-process
     (/root/reference/dynamic_script_faiss.py:53-57); this is the
     cluster-shaped equivalent with deterministic seeds."""
-    import pandas as pd
 
     from cs598vectordb_spark.operators.index import _kmeans_fit
 
@@ -272,11 +280,7 @@ def knn_graph_search(
             .drop("_r")
             .localCheckpoint(eager=True)
         )
-    return (
-        visited.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", F.col("node").alias("vec_id"), "dist")
-    )
+    return rank_topk(visited.select("q_id", F.col("node").alias("vec_id"), "dist"), k)
 
 
 # ---- layered (segmented) graph index ------------------------------------
@@ -592,7 +596,6 @@ def build_layered_graph(
     build each segment's kNN subgraph inside one applyInPandas stage and
     persist the (segment, vector, adjacency) table hash-partitioned on
     centroid_id so probes reach the walk kernel exchange-free."""
-    import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -668,13 +671,14 @@ def _beam_walk_block(
     beam: int,
     rounds: int,
     n_entry: int,
-) -> tuple[list, list, list]:
+) -> pd.DataFrame:
     """Best-first beam walk of ONE decoded segment for a block of
     queries — the numpy kernel shared verbatim by the Arrow-payload
     probe (`_walk_probed_segments`) and the worker-served probe
     (`_walk_served_segments`), so the two serving modes are identical
     by construction. Deterministic: entry points are evenly spaced
-    positions, ties broken by (dist, vec_id)."""
+    positions, and the emitted local top-k is the canonical
+    (dist, vec_id) cut over every node the walk scored."""
     c = len(ids)
     entries = np.unique(np.linspace(0, c - 1, min(n_entry, c)).astype(np.int64))
     out_q, out_id, out_d = [], [], []
@@ -694,14 +698,17 @@ def _beam_walk_block(
                 break
             dist[new] = np.maximum(sq_x[new] - 2.0 * (X[new] @ q) + sq_q, 0.0)
         scored = np.flatnonzero(np.isfinite(dist))
-        k_eff = min(k, len(scored))
-        top = scored[np.argpartition(dist[scored], k_eff - 1)[:k_eff]]
-        order = np.lexsort((ids[top], dist[top]))
-        top = top[order]
+        top = scored[topk_canonical_idx(dist[scored, None], ids[scored], k)[0]]
         out_q.append(np.full(len(top), bq_ids[j], dtype=np.int64))
         out_id.append(ids[top])
         out_d.append(dist[top])
-    return out_q, out_id, out_d
+    return pd.DataFrame(
+        {
+            "q_id": np.concatenate(out_q),
+            "vec_id": np.concatenate(out_id),
+            "dist": np.concatenate(out_d),
+        }
+    )
 
 
 def _walk_probed_segments(
@@ -726,14 +733,10 @@ def _walk_probed_segments(
     are driver-sized by design (the query batch is the one by-design
     driver-side collect). With a codec the kernel reconstructs int8 codes
     on the fly."""
-    import pandas as pd
-
     spark = segments.sparkSession
     codec_arrs = (codec.mins, codec.ranges) if codec is not None else None
     data_col = "codes" if codec is not None else vec_col
-    # pooled: repeated probes (streams, tenant loops) must not
-    # accumulate per-call broadcasts — see _pooled_broadcast
-    bc = _pooled_broadcast(spark, (q_ids, Q, probed, codec_arrs))
+    bc = pooled_broadcast(spark, (q_ids, Q, probed, codec_arrs))
 
     def walk(pdf: pd.DataFrame) -> pd.DataFrame:
         bq_ids, bQ, bprobed, bcodec = bc.value
@@ -771,15 +774,8 @@ def _walk_probed_segments(
             for n in pdf["nbr_ids"]
         ]
         sq_x = np.square(X).sum(axis=1)
-        out_q, out_id, out_d = _beam_walk_block(
+        return _beam_walk_block(
             ids, X, nbr_pos, sq_x, bQ, bq_ids, qsel, k, beam, rounds, n_entry
-        )
-        return pd.DataFrame(
-            {
-                "q_id": np.concatenate(out_q),
-                "vec_id": np.concatenate(out_id),
-                "dist": np.concatenate(out_d),
-            }
         )
 
     local = (
@@ -787,12 +783,7 @@ def _walk_probed_segments(
         .groupBy(key_col)
         .applyInPandas(walk, "q_id long, vec_id long, dist double")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)
 
 
 # ---- worker-side segment serving (r13) -----------------------------------
@@ -850,37 +841,6 @@ def _read_epoch(seg_dir: str) -> str | None:
             return fh.read().strip() or None
     except OSError:
         return None
-
-
-# Bounded pool of live probe broadcasts. Every probe call broadcasts its
-# (queries, probed-map, codec) block; a long-running served stream (one
-# probe per micro-batch) would otherwise accumulate broadcasts for the
-# life of the stream (ADVICE r13). Eviction uses unpersist(), NOT
-# destroy(): an evicted broadcast still referenced by an in-flight
-# concurrent probe (multi_tenant's N client threads) is simply re-sent
-# to executors on next access — correctness is unaffected, the worst
-# case re-pays one O(nq·dim) transfer.
-_PROBE_BC_POOL: list = []
-_PROBE_BC_CAP = 16
-# probes run from many concurrent tenant/stream threads (the 50-client
-# sweep, DynamicBatcher leaders); the append/evict pair must be atomic
-# or racing leaders can overshoot the cap (ADVICE r14)
-_PROBE_BC_LOCK = threading.Lock()
-
-
-def _pooled_broadcast(spark, payload):
-    bc = spark.sparkContext.broadcast(payload)
-    evicted = []
-    with _PROBE_BC_LOCK:
-        _PROBE_BC_POOL.append(bc)
-        while len(_PROBE_BC_POOL) > _PROBE_BC_CAP:
-            evicted.append(_PROBE_BC_POOL.pop(0))
-    for old in evicted:  # unpersist outside the lock — it can block
-        try:
-            old.unpersist(False)
-        except Exception:
-            pass  # sc already stopped / broadcast gone — nothing to free
-    return bc
 
 
 def _seg_cache_cap() -> int:
@@ -992,11 +952,9 @@ def _walk_served_segments(
     a codec (SQ8 segments) the worker caches the int8 codes — the
     compressed index's 4× memory advantage carries into the serving
     cache — and reconstructs per walk."""
-    import pandas as pd
-
     codec_arrs = (codec.mins, codec.ranges) if codec is not None else None
     data_col = "codes" if codec is not None else vec_col
-    bc = _pooled_broadcast(spark, (q_ids, Q, probed, codec_arrs))
+    bc = pooled_broadcast(spark, (q_ids, Q, probed, codec_arrs))
     sids = sorted(int(s) for s in probed)
     width = max(1, min(len(sids), 2 * spark.sparkContext.defaultParallelism))
     sdf = spark.createDataFrame([(s,) for s in sids], f"{key_col} int")
@@ -1026,28 +984,39 @@ def _walk_served_segments(
                 if barrs is not None:
                     mns, rngs = barrs
                     X = mns[None, :] + X / 255.0 * rngs[None, :]
-                out_q, out_id, out_d = _beam_walk_block(
+                yield _beam_walk_block(
                     ids, X, nbr_pos, sq_x, bQ, bq_ids, qsel,
                     k, beam, rounds, n_entry,
                 )
-                if out_q:
-                    yield pd.DataFrame(
-                        {
-                            "q_id": np.concatenate(out_q),
-                            "vec_id": np.concatenate(out_id),
-                            "dist": np.concatenate(out_d),
-                        }
-                    )
 
     local = sdf.repartition(width, key_col).mapInPandas(
         serve, "q_id long, vec_id long, dist double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)
+
+
+def _walk_segments(
+    index,
+    key_col: str,
+    probed: dict[int, np.ndarray],
+    q_ids: np.ndarray,
+    Q: np.ndarray,
+    k: int,
+    beam: int,
+    rounds: int,
+    n_entry: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Walk the probed segments of a layered index: worker-served when
+    the index was opened served, else through the Arrow payload path."""
+    codec = getattr(index, "codec", None)
+    args = (probed, q_ids, Q, codec, k, beam, rounds, n_entry, id_col, vec_col)
+    if index.serve_dir is not None:
+        return _walk_served_segments(
+            index.segments.sparkSession, index.serve_dir, key_col, *args
+        )
+    return _walk_probed_segments(index.segments, key_col, *args)
 
 
 def knn_graph_layered(
@@ -1066,51 +1035,10 @@ def knn_graph_layered(
     driver-sized, exactly like knn_ivf); each probed segment walks its
     subgraph for all of its queries inside ONE kernel invocation; a single
     window merges the ≤ nprobe·|Q|·k candidates globally."""
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    d2 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ index.centroids.T)
-        + np.square(index.centroids).sum(1)[None, :]
-    )
-    nearest = np.argsort(d2, axis=1)[:, : min(nprobe, index.nlist)]
-    probed: dict[int, list[int]] = {}
-    for j, row in enumerate(nearest):
-        for cid in row:
-            probed.setdefault(int(cid), []).append(j)
-    probed_np = {
-        cid: np.asarray(js, dtype=np.int64) for cid, js in probed.items()
-    }
-    if getattr(index, "serve_dir", None) is not None:
-        return _walk_served_segments(
-            index.segments.sparkSession,
-            index.serve_dir,
-            "centroid_id",
-            probed_np,
-            q_ids,
-            Q,
-            index.codec,
-            k,
-            beam,
-            rounds,
-            n_entry,
-            id_col,
-            vec_col,
-        )
-    return _walk_probed_segments(
-        index.segments,
-        "centroid_id",
-        probed_np,
-        q_ids,
-        Q,
-        index.codec,
-        k,
-        beam,
-        rounds,
-        n_entry,
-        id_col,
-        vec_col,
+    q_ids, Q = query_block(queries, vec_col)
+    probed = probers_by_list(nearest_lists(Q, index.centroids, min(nprobe, index.nlist)))
+    return _walk_segments(
+        index, "centroid_id", probed, q_ids, Q, k, beam, rounds, n_entry, id_col, vec_col
     )
 
 
@@ -1197,7 +1125,6 @@ def build_layered_graph2(
         auto1, auto2 = default_grid2(base.count())
         nlist1 = auto1 if nlist1 is None else nlist1
         nlist2 = auto2 if nlist2 is None else nlist2
-    import pandas as pd
     from pyspark.sql.types import (
         ArrayType,
         IntegerType,
@@ -1276,78 +1203,10 @@ def knn_graph_layered2(
     reaches the driver, unlike knn_graph_layered's top layer), the best
     nprobe2 sub-cells per query walked by the shared segment kernel, one
     window merge. Same plan tail as knn_graph_layered."""
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    nq = len(q_ids)
-    C1 = index.l1_centroids
-    d1 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C1.T)
-        + np.square(C1).sum(1)[None, :]
-    )
-    np1 = min(nprobe1, index.nlist1)
-    cells = np.argsort(d1, axis=1)[:, :np1]
-    cell_set = sorted({int(c) for row in cells for c in row})
-    l2 = (
-        index.l2_table.filter(F.col("l1_id").isin(cell_set))
-        .select("l1_id", "l2_id", "centroid")
-        .collect()
-    )
-    keys = np.array(
-        [r["l1_id"] * index.nlist2 + r["l2_id"] for r in l2], dtype=np.int64
-    )
-    C2 = np.ascontiguousarray(
-        np.stack([np.asarray(r["centroid"]) for r in l2]), dtype=np.float64
-    )
-    d2 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C2.T)
-        + np.square(C2).sum(1)[None, :]
-    )
-    cell_ok = np.zeros((nq, len(l2)), dtype=bool)
-    row_cell = keys // index.nlist2
-    for j in range(nq):
-        cell_ok[j] = np.isin(row_cell, cells[j])
-    d2[~cell_ok] = np.inf
-    np2 = min(nprobe2, len(l2))
-    order = np.argsort(d2, axis=1)[:, :np2]
-    probed: dict[int, list[int]] = {}
-    for j in range(nq):
-        for key in keys[order[j]][np.isfinite(d2[j, order[j]])]:
-            probed.setdefault(int(key), []).append(j)
-    probed_np = {
-        key: np.asarray(js, dtype=np.int64) for key, js in probed.items()
-    }
-    if index.serve_dir is not None:
-        return _walk_served_segments(
-            index.segments.sparkSession,
-            index.serve_dir,
-            "segment_id",
-            probed_np,
-            q_ids,
-            Q,
-            None,
-            k,
-            beam,
-            rounds,
-            n_entry,
-            id_col,
-            vec_col,
-        )
-    return _walk_probed_segments(
-        index.segments,
-        "segment_id",
-        probed_np,
-        q_ids,
-        Q,
-        None,
-        k,
-        beam,
-        rounds,
-        n_entry,
-        id_col,
-        vec_col,
+    q_ids, Q = query_block(queries, vec_col)
+    _, probed = select_sublists(index, Q, nprobe1, nprobe2)
+    return _walk_segments(
+        index, "segment_id", probed, q_ids, Q, k, beam, rounds, n_entry, id_col, vec_col
     )
 
 
@@ -1440,15 +1299,7 @@ def knn_graph_layered2_filtered(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        out.dropDuplicates(["q_id", "vec_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(out.dropDuplicates(["q_id", "vec_id"]), k)
 
 
 def autotune_layered2(
@@ -1773,7 +1624,6 @@ def _make_repair_kernel(id_col: str, data_col: str, degree: int, codec_arrs):
     neighbors' 2-hop neighborhoods so degree does not erode across
     cycles. With codec_arrs set, ranking happens in reconstructed-float
     space — the same space the walk kernel scores probes in."""
-    import pandas as pd
 
     def repair(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
@@ -1970,7 +1820,6 @@ def insert_into_layered(
     drift cost until the next periodic rebuild. The reference inserts
     into every backend it benchmarks — dynamic_script_faiss.py:108,
     dynamic_script_ngt.py:113-115.)"""
-    import pandas as pd
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = delta.sparkSession

@@ -32,11 +32,19 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
 from cs598vectordb_spark.functions.distance import squared_l2
+from cs598vectordb_spark.operators.knn import (
+    nearest_lists,
+    pooled_broadcast,
+    query_block,
+    rank_topk,
+    squared_l2_block,
+    topk_canonical,
+)
 
 # ------------------------------------------------------------------ LSH
 
@@ -184,16 +192,15 @@ def lsh_candidates(
     base-side hash table is ever computed distributed."""
     import pandas as pd
 
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    n = len(qpdf)
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
+    q_ids, Q = query_block(queries, vec_col)
+    n = len(q_ids)
     h = index.hashes_per_table
     num_tables = index.projections.shape[0] // h
     H = np.floor((Q @ index.projections.T) / index.bucket_length).astype(np.int64)
     q_long = queries.sparkSession.createDataFrame(
         pd.DataFrame(
             {
-                "q_id": np.repeat(qpdf["q_id"].to_numpy(dtype=np.int64), num_tables),
+                "q_id": np.repeat(q_ids, num_tables),
                 "table_idx": np.tile(np.arange(num_tables, dtype=np.int32), n),
                 "bucket": [
                     "|".join(map(str, H[i, t * h : (t + 1) * h]))
@@ -233,14 +240,13 @@ def knn_lsh(
     scored = (
         cand.join(base.select(F.col(id_col), F.col(vec_col).alias("_b_emb")), id_col)
         .join(F.broadcast(qv), "q_id")
-        .select("q_id", id_col, squared_l2("_q_emb", "_b_emb").alias("dist"))
+        .select(
+            "q_id",
+            F.col(id_col).alias("vec_id"),
+            squared_l2("_q_emb", "_b_emb").alias("dist"),
+        )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", F.col(id_col).alias("vec_id"), "dist")
-    )
+    return rank_topk(scored, k)
 
 
 # ------------------------------------------------------------------ IVF
@@ -454,23 +460,9 @@ def knn_ivf(
     (multi_tenant_script.py:98). After the pruned scan there are NO
     joins: one map stage emits local top-k, the only shuffle carries
     ≤ |parts|·|Q|·k rows into the final window."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
-
-    spark = queries.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    d2 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ index.centroids.T)
-        + np.square(index.centroids).sum(1)[None, :]
-    )
-    nearest = np.argsort(d2, axis=1)[:, :nprobe]
-    probed = np.zeros((index.nlist, len(q_ids)), dtype=bool)  # centroid × query
-    for j, row in enumerate(nearest):
-        probed[row, j] = True
-    probe_set = sorted({int(c) for row in nearest for c in row})
-    bc = spark.sparkContext.broadcast((q_ids, Q, probed))
+    q_ids, Q = query_block(queries, vec_col)
+    probed, probe_set = probe_mask(nearest_lists(Q, index.centroids, nprobe), index.nlist)
+    bc = pooled_broadcast(queries.sparkSession, (q_ids, Q, probed))
 
     def kernel(batches):
         bq_ids, bQ, bprobed = bc.value
@@ -481,7 +473,7 @@ def knn_ivf(
             B = np.ascontiguousarray(np.stack(pdf[vec_col].to_numpy()), dtype=np.float64)
             scores = squared_l2_block(B, bQ)
             scores[~bprobed[pdf["centroid_id"].to_numpy(dtype=np.int64)]] = np.inf
-            out = _topk_from_scores(scores, ids, bq_ids, k, ascending=True)
+            out = topk_canonical(scores, ids, bq_ids, k, ascending=True)
             if len(out):
                 yield out
 
@@ -490,12 +482,16 @@ def knn_ivf(
         .select(F.col(id_col), F.col(vec_col), F.col("centroid_id"))
         .mapInPandas(kernel, "q_id long, vec_id long, dist double")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)
+
+
+def probe_mask(nearest: np.ndarray, nlist: int) -> tuple[np.ndarray, list[int]]:
+    """(nlist × |Q| membership mask, sorted probed list ids) for the
+    masked-GEMM IVF kernels: a (row, query) score is kept only when the
+    row's list is one the query probes."""
+    probed = np.zeros((nlist, len(nearest)), dtype=bool)
+    probed[nearest, np.arange(len(nearest))[:, None]] = True
+    return probed, np.unique(nearest).tolist()
 
 
 def build_ivf_index_mllib(

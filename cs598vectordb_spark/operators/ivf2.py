@@ -30,10 +30,18 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
+from cs598vectordb_spark.operators.knn import (
+    nearest_lists,
+    pooled_broadcast,
+    query_block,
+    rank_topk,
+    squared_l2_block,
+    topk_canonical,
+)
 
 
 @dataclass
@@ -160,40 +168,19 @@ def materialize_ivf2(index: Ivf2Index, path: str) -> Ivf2Index:
     )
 
 
-def knn_ivf2(
-    index: Ivf2Index,
-    queries: DataFrame,
-    k: int = DEFAULT_K,
-    nprobe1: int = 4,
-    nprobe2: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Hierarchical probe: L1 scored on the driver, the probed cells' L2
-    rows pulled (bounded: nprobe1 * nlist2), the best nprobe2 sub-lists
-    per query kept, then one masked-GEMM kernel over the pruned scan and
-    one WindowGroupLimit merge — the flat-IVF plan with a two-level
-    pruner in front."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
-
-    spark = queries.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    nq = len(q_ids)
-
-    # L1: driver GEMM over the (driver-sized) coarse layer
-    C1 = index.l1_centroids
-    d1 = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C1.T)
-        + np.square(C1).sum(1)[None, :]
-    )
-    np1 = min(nprobe1, index.nlist1)
-    cells = np.argsort(d1, axis=1)[:, :np1]
-    cell_set = sorted({int(c) for row in cells for c in row})
-
-    # L2: pull ONLY the probed cells' sub-centroids (bounded collect)
+def select_sublists(
+    index, Q: np.ndarray, nprobe1: int, nprobe2: int
+) -> tuple[list[int], dict[int, np.ndarray]]:
+    """The two-level probe selection shared by knn_ivf2 and
+    knn_graph_layered2 (any index with l1_centroids, l2_table, nlist1,
+    nlist2): L1 scored on the driver, ONLY the probed cells' L2 rows
+    pulled (bounded collect: nprobe1·nlist2), then each query's best
+    nprobe2 sub-lists among its own cells. Returns (probed L1 cells,
+    sub-list key l1·nlist2 + l2 → ascending query indices). Arithmetic
+    is nearest_lists' GEMM expansion + argsort at both levels."""
+    nq = len(Q)
+    cells = nearest_lists(Q, index.l1_centroids, min(nprobe1, index.nlist1))
+    cell_set = np.unique(cells).tolist()
     l2 = (
         index.l2_table.filter(F.col("l1_id").isin(cell_set))
         .select("l1_id", "l2_id", "centroid")
@@ -207,20 +194,34 @@ def knn_ivf2(
         + np.square(C2).sum(1)[None, :]
     )
     # mask sub-lists whose cell the query did not probe
-    cell_ok = np.zeros((nq, len(l2)), dtype=bool)
     row_cell = keys // index.nlist2
     for j in range(nq):
-        cell_ok[j] = np.isin(row_cell, cells[j])
-    d2[~cell_ok] = np.inf
-    np2 = min(nprobe2, len(l2))
-    order = np.argsort(d2, axis=1)[:, :np2]
-    probed: dict[int, np.ndarray] = {}
+        d2[j, ~np.isin(row_cell, cells[j])] = np.inf
+    order = np.argsort(d2, axis=1)[:, : min(nprobe2, len(l2))]
+    probed: dict[int, list[int]] = {}
     for j in range(nq):
         for key in keys[order[j]][np.isfinite(d2[j, order[j]])]:
-            probed.setdefault(int(key), []).append(j)  # type: ignore[arg-type]
-    probed = {key: np.asarray(js, dtype=np.int64) for key, js in probed.items()}
+            probed.setdefault(int(key), []).append(j)
+    return cell_set, {key: np.asarray(js, dtype=np.int64) for key, js in probed.items()}
+
+
+def knn_ivf2(
+    index: Ivf2Index,
+    queries: DataFrame,
+    k: int = DEFAULT_K,
+    nprobe1: int = 4,
+    nprobe2: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Hierarchical probe: the two-level selection (select_sublists),
+    then one masked-GEMM kernel over the pruned scan and one
+    WindowGroupLimit merge — the flat-IVF plan with a two-level pruner
+    in front."""
+    q_ids, Q = query_block(queries, vec_col)
+    cell_set, probed = select_sublists(index, Q, nprobe1, nprobe2)
     probe_keys = sorted(probed)
-    bc = spark.sparkContext.broadcast((q_ids, Q, probed, index.nlist2))
+    bc = pooled_broadcast(queries.sparkSession, (q_ids, Q, probed, index.nlist2))
 
     def kernel(batches):
         bq_ids, bQ, bprobed, n2 = bc.value
@@ -240,7 +241,7 @@ def knn_ivf2(
                 if js is not None:
                     mask[np.ix_(row_keys == key, js)] = True
             scores[~mask] = np.inf
-            out = _topk_from_scores(scores, ids, bq_ids, k, ascending=True)
+            out = topk_canonical(scores, ids, bq_ids, k, ascending=True)
             if len(out):
                 yield out
 
@@ -250,9 +251,4 @@ def knn_ivf2(
         .select(F.col(id_col), F.col(vec_col), F.col("l1_id"), F.col("l2_id"))
         .mapInPandas(kernel, "q_id long, vec_id long, dist double")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)

@@ -31,11 +31,20 @@ import os
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
 from cs598vectordb_spark.operators.index import build_ivf_index
+from cs598vectordb_spark.operators.knn import (
+    nearest_lists,
+    pooled_broadcast,
+    probers_by_list,
+    query_block,
+    rank_topk,
+    topk_canonical,
+    topk_canonical_idx,
+)
 from cs598vectordb_spark.operators.pq import PqCodebooks, _kmeans_fit
 
 
@@ -163,105 +172,7 @@ def knn_ivfpq(
     Output (q_id, rank, vec_id, dist) — dist is the quantized distance;
     compose with the exact re-rank (knn_pq_refined pattern) when the
     shortlist feeds a recall-critical consumer."""
-    spark = index.codes.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    C = index.centroids
-    books = index.cb.codebooks
-    m, dsub = index.cb.m, books.shape[2]
-
-    # driver-side probe selection: queries and centroids are both
-    # driver-sized (the reference's own design point)
-    qc = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C.T)
-        + np.square(C).sum(1)[None, :]
-    )
-    probed = np.argsort(qc, axis=1)[:, :nprobe]  # (nq, nprobe)
-
-    # LUTs are built INSIDE the kernel per (list, its probers) — the
-    # broadcast carries only (queries, centroids, codebooks), O(nq·dim
-    # + nlist·dim + m·ksub·dsub). The precomputed-T form shipped
-    # nq·nprobe·m·ksub doubles: 262 MB at (1000, 8, 16, 256) — the
-    # broadcast serialization alone cost more than the whole probe
-    # (measured 14.9 s vs 4.4 s at 1M×1024). Worker-side LUT math is
-    # ~p·m·ksub·dsub flops per list — ~0.5 GFLOPs total at that shape,
-    # spread over the scan's own parallelism.
-    nq = len(q_ids)
-    probe_map: dict[int, list[int]] = {}
-    for qi in range(nq):
-        for pi in range(nprobe):
-            probe_map.setdefault(int(probed[qi, pi]), []).append(qi)
-    b2 = np.square(books).sum(2)  # (m, ksub)
-    bc = spark.sparkContext.broadcast((q_ids, Q, C, books, b2, probe_map))
-
-    lists = sorted(probe_map)
-    pruned = index.codes.filter(F.col("centroid_id").isin(lists))
-
-    def kern(batches):
-        import pandas as pd
-
-        bq_ids, bQ, bC, Bk, bb2, bmap = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_q, out_id, out_d = [], [], []
-            for cid, grp in pdf.groupby("centroid_id"):
-                probers = bmap.get(int(cid))
-                if not probers:
-                    continue
-                Cd = np.stack(grp["codes"].to_numpy())  # (n, m)
-                ids = grp[id_col].to_numpy(dtype=np.int64)
-                n = len(ids)
-                k_eff = min(k, n)
-                # per-list LUT + ADC for EVERY prober in one vectorized
-                # pass: m small GEMMs and m gathers of shape (p, n) —
-                # the per-prober Python loop this replaces did p·m tiny
-                # gathers and dominated the probe's fixed overhead at
-                # serving batch sizes (p ≈ nq·nprobe/nlist per list).
-                qis = np.asarray(probers, dtype=np.int64)
-                Rq = bQ[qis] - bC[int(cid)]  # (p, dim)
-                scores = np.zeros((len(probers), n))
-                for j in range(m):
-                    sub = Rq[:, j * dsub : (j + 1) * dsub]
-                    Tj = (
-                        np.square(sub).sum(1, keepdims=True)
-                        - 2.0 * (sub @ Bk[j].T)
-                        + bb2[j][None, :]
-                    )  # (p, ksub)
-                    scores += Tj[:, Cd[:, j]]
-                for t in range(len(probers)):
-                    s = scores[t]
-                    part = np.argpartition(s, k_eff - 1)[:k_eff]
-                    # widen the cut to EVERY row tied with the k-boundary
-                    # score (identical code vectors are plausible at small
-                    # ksub / duplicate inputs), then order the candidates
-                    # by (score, vec_id) — the same total order the final
-                    # window uses — so the emitted top-k is deterministic
-                    # across partitionings, not argpartition-arbitrary.
-                    cand = np.flatnonzero(s <= s[part].max())
-                    order = np.lexsort((ids[cand], s[cand]))[:k_eff]
-                    sel = cand[order]
-                    out_q.append(np.full(k_eff, bq_ids[qis[t]], dtype=np.int64))
-                    out_id.append(ids[sel])
-                    out_d.append(s[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "vec_id": np.concatenate(out_id),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
-
-    local = pruned.mapInPandas(kern, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return _adc_probe(index, queries, k, nprobe, None, vec_col, id_col)
 
 
 def knn_ivfpq_refined(
@@ -284,8 +195,8 @@ def knn_ivfpq_refined(
     (pinned in tests/test_pq.py and tests/test_updates_metrics.py).
 
     Two physical strategies, picked by the index layout:
-    - FUSED (index built with keep_vectors=True): the probe kernel
-      ADC-selects the per-(query, list) top-mult·k and re-ranks them
+    - FUSED (index built with keep_vectors=True): the ADC kernel
+      selects the per-(query, list) top-mult·k and re-ranks them
       exactly IN PLACE from the vectors stored beside the codes — plan
       is scan(pruned) → kernel → one top-k window, the same 2-stage
       shape as plain ADC. The r11 join form paid an extra window
@@ -302,10 +213,7 @@ def knn_ivfpq_refined(
     from cs598vectordb_spark.functions.distance import squared_l2
 
     if vec_col in index.codes.columns:
-        return _knn_ivfpq_refined_fused(
-            index, queries, k=k, nprobe=nprobe, mult=mult,
-            vec_col=vec_col, id_col=id_col,
-        )
+        return _adc_probe(index, queries, k, nprobe, mult, vec_col, id_col)
     shortlist = knn_ivfpq(index, queries, k=mult * k, nprobe=nprobe).select(
         "q_id", "vec_id"
     )
@@ -318,141 +226,91 @@ def knn_ivfpq_refined(
         .join(F.broadcast(qv), "q_id")
         .select("q_id", "vec_id", squared_l2("_q_emb", "_b_emb").alias("dist"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(scored, k)
 
 
-def _knn_ivfpq_refined_fused(
+def _adc_probe(
     index: IvfPqIndex,
     queries: DataFrame,
     k: int,
     nprobe: int,
-    mult: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
+    mult: int | None,
+    vec_col: str,
+    id_col: str,
 ) -> DataFrame:
-    """Map-side ADC-select + exact re-rank over a keep_vectors index:
-    one pruned scan, one Arrow kernel, one final top-k window. Per
-    (query, probed list): ADC scores every code row (the vectorized
-    m-gather pass shared with knn_ivfpq), cuts to the top mult·k by
-    (adc, vec_id) deterministic order, computes exact squared-L2 on
-    just those rows' stored vectors, and emits the local exact top-k;
-    the window merges per-list winners globally. Exact-math volume is
-    the same mult·k per probe pair as the join form; the exchanges the
-    join form paid (shortlist window + full-base join) are gone.
+    """The one IVF-PQ probe kernel: one pruned scan, one Arrow kernel,
+    one final top-k window. Per (probed list, its probers) the kernel
+    builds the residual LUTs and ADC-scores every code row; with
+    `mult` set (the fused refined probe — the layout stores vectors) it
+    cuts each prober to its top mult·k by (adc, vec_id), computes exact
+    squared L2 on just those rows' stored vectors, and emits the exact
+    local top-k; without it, the ADC local top-k.
 
-    Granularity note: the mult·k ADC cut is per (query, list,
+    LUTs are built INSIDE the kernel per (list, its probers) — the
+    broadcast carries only (queries, centroids, codebooks), O(nq·dim +
+    nlist·dim + m·ksub·dsub). The precomputed-T form shipped
+    nq·nprobe·m·ksub doubles: 262 MB at (1000, 8, 16, 256) — the
+    broadcast serialization alone cost more than the whole probe
+    (measured 14.9 s vs 4.4 s at 1M×1024).
+
+    Granularity note (fused): the mult·k ADC cut is per (query, list,
     PARTITION-FRAGMENT) — when a list's rows span physical partitions
     (in-memory builds; multi-file lists), each fragment contributes its
     own top-mult·k, so fragmentation only WIDENS the candidate set
     (recall is monotone ≥ the whole-list cut; floors unaffected). The
     flip side: two different physical layouts can return different —
     both floor-valid — top-k for near-boundary candidates, which is
-    why this entry is floor-pinned, not value-hashed. The 1M
+    why the fused entry is floor-pinned, not value-hashed. The 1M
     measurement of exactly this: a 32k-tiny-file layout made the probe
     effectively exact over probed lists (recall 0.995) where the
     1-file-per-list layout's honest ADC cut reads 0.71 at mult=10."""
-    spark = index.codes.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    C = index.centroids
+    import pandas as pd
+
+    q_ids, Q = query_block(queries, vec_col)
     books = index.cb.codebooks
     m, dsub = index.cb.m, books.shape[2]
-
-    qc = (
-        np.square(Q).sum(1, keepdims=True)
-        - 2.0 * (Q @ C.T)
-        + np.square(C).sum(1)[None, :]
+    probe_map = probers_by_list(nearest_lists(Q, index.centroids, nprobe))
+    b2 = np.square(books).sum(2)  # (m, ksub)
+    bc = pooled_broadcast(
+        queries.sparkSession, (q_ids, Q, index.centroids, books, b2, probe_map)
     )
-    probed = np.argsort(qc, axis=1)[:, :nprobe]
-
-    # worker-side LUTs (see knn_ivfpq): broadcast stays O(nq·dim), not
-    # the 262 MB nq·nprobe·m·ksub tensor that dominated the probe
-    nq = len(q_ids)
-    probe_map: dict[int, list[int]] = {}
-    for qi in range(nq):
-        for pi in range(nprobe):
-            probe_map.setdefault(int(probed[qi, pi]), []).append(qi)
-    b2 = np.square(books).sum(2)
-    bc = spark.sparkContext.broadcast((q_ids, Q, C, books, b2, probe_map))
-
-    lists = sorted(probe_map)
-    pruned = index.codes.filter(F.col("centroid_id").isin(lists))
+    pruned = index.codes.filter(F.col("centroid_id").isin(sorted(probe_map)))
 
     def kern(batches):
-        import pandas as pd
-
         bq_ids, bQ, bC, Bk, bb2, bmap = bc.value
         for pdf in batches:
-            if not len(pdf):
-                continue
-            out_q, out_id, out_d = [], [], []
+            outs = []
             for cid, grp in pdf.groupby("centroid_id"):
-                probers = bmap.get(int(cid))
-                if not probers:
+                qis = bmap.get(int(cid))
+                if qis is None:
                     continue
-                Cd = np.stack(grp["codes"].to_numpy())
-                V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+                Cd = np.stack(grp["codes"].to_numpy())  # (n, m)
                 ids = grp[id_col].to_numpy(dtype=np.int64)
-                n = len(ids)
-                mk = min(mult * k, n)
-                k_eff = min(k, n)
-                qis = np.asarray(probers, dtype=np.int64)
-                Rq = bQ[qis] - bC[int(cid)]
-                scores = np.zeros((len(probers), n))
+                # LUT + ADC for EVERY prober in one vectorized pass: m
+                # small GEMMs and m gathers of shape (p, n)
+                Rq = bQ[qis] - bC[int(cid)]  # (p, dim)
+                scores = np.zeros((len(qis), len(ids)))
                 for j in range(m):
                     sub = Rq[:, j * dsub : (j + 1) * dsub]
                     Tj = (
                         np.square(sub).sum(1, keepdims=True)
                         - 2.0 * (sub @ Bk[j].T)
                         + bb2[j][None, :]
-                    )
+                    )  # (p, ksub)
                     scores += Tj[:, Cd[:, j]]
-                # deterministic ADC cut per prober: widen boundary ties,
-                # order by (adc, vec_id), take mult·k
-                sel = np.empty((len(probers), mk), dtype=np.int64)
-                for t in range(len(probers)):
-                    s = scores[t]
-                    part = np.argpartition(s, mk - 1)[:mk]
-                    cand = np.flatnonzero(s <= s[part].max())
-                    order = np.lexsort((ids[cand], s[cand]))[:mk]
-                    sel[t] = cand[order]
-                # exact refine on the selected rows only: (p, mk) pairs
-                Cs = V[sel]  # (p, mk, dim)
-                qv = bQ[qis]  # (p, dim)
-                ex = np.square(Cs - qv[:, None, :]).sum(axis=2)  # (p, mk)
-                for t in range(len(probers)):
-                    d = ex[t]
-                    kk = min(k_eff, mk)
-                    part = np.argpartition(d, kk - 1)[:kk]
-                    cand = np.flatnonzero(d <= d[part].max())
-                    tids = ids[sel[t]]
-                    order = np.lexsort((tids[cand], d[cand]))[:kk]
-                    pick = cand[order]
-                    out_q.append(np.full(kk, bq_ids[qis[t]], dtype=np.int64))
-                    out_id.append(tids[pick])
-                    out_d.append(d[pick])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        "vec_id": np.concatenate(out_id),
-                        "dist": np.concatenate(out_d),
-                    }
-                )
+                scores = scores.T  # (n, p): the canonical cut's block shape
+                if mult is not None:  # exact re-rank of the ADC top mult·k
+                    b_idx, q_idx = topk_canonical_idx(scores, ids, mult * k)
+                    V = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+                    exact = np.square(V[b_idx] - bQ[qis[q_idx]]).sum(axis=1)
+                    scores.fill(np.inf)
+                    scores[b_idx, q_idx] = exact
+                outs.append(topk_canonical(scores, ids, bq_ids[qis], k, True))
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
 
     local = pruned.mapInPandas(kern, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)
 
 
 def delete_from_ivfpq(

@@ -29,6 +29,7 @@ tie-break matches FIXTURES.md so results hash-compare against DuckDB.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Iterator
 
 import numpy as np
@@ -40,6 +41,100 @@ from cs598vectordb_spark.config import DEFAULT_K
 from cs598vectordb_spark.functions.distance import cosine_similarity, squared_l2
 
 _KNN_SCHEMA = "q_id long, vec_id long, dist double"
+
+# ---- the probe path every ANN family shares ------------------------------
+# Each probe is: collect the (driver-sized) query block, pick the lists
+# or segments to read, broadcast the query block through the pool, cut
+# each kernel's local top-k canonically, and rank the survivors in one
+# per-query window. A new family composes these; it never copies them.
+
+
+def query_block(queries: DataFrame, vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray]:
+    """(q_ids int64, Q contiguous float64 |Q|×dim): the one by-design
+    driver-side collect of a probe — the reference's xq is 10K × 128,
+    driver-sized by construction."""
+    qpdf = queries.select("q_id", vec_col).toPandas()
+    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
+    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
+    return q_ids, Q
+
+
+def nearest_lists(Q: np.ndarray, centroids: np.ndarray, nprobe: int) -> np.ndarray:
+    """(|Q|, nprobe) ids of each query's nprobe nearest centroids, nearest
+    first. The GEMM expansion ‖q‖² − 2·q·c + ‖c‖² and the full argsort
+    are the arithmetic every pinned probe result was produced with; do
+    not swap in squared_l2_block, whose clamp and transposed GEMM can
+    reorder near-ties."""
+    d2 = (
+        np.square(Q).sum(1, keepdims=True)
+        - 2.0 * (Q @ centroids.T)
+        + np.square(centroids).sum(1)[None, :]
+    )
+    return np.argsort(d2, axis=1)[:, :nprobe]
+
+
+def probers_by_list(nearest: np.ndarray) -> dict[int, np.ndarray]:
+    """Invert nearest_lists: list id → ascending indices of the queries
+    that probe it."""
+    out: dict[int, list[int]] = {}
+    for j, row in enumerate(nearest):
+        for c in row:
+            out.setdefault(int(c), []).append(j)
+    return {c: np.asarray(js, dtype=np.int64) for c, js in out.items()}
+
+
+# Bounded pool of live probe broadcasts. Every probe call broadcasts its
+# query block; a long-running served stream (one probe per micro-batch)
+# or an update loop (one probe per merged request) would otherwise
+# accumulate broadcasts for its whole life (ADVICE r13). Eviction uses
+# unpersist(), NOT destroy(): an evicted broadcast still referenced by an
+# in-flight concurrent probe (multi_tenant's N client threads) is simply
+# re-sent to executors on next access — correctness is unaffected, the
+# worst case re-pays one O(nq·dim) transfer.
+_PROBE_BC_POOL: list = []
+_PROBE_BC_CAP = 16
+# probes run from many concurrent tenant/stream threads (the 50-client
+# sweep, DynamicBatcher leaders); the append/evict pair must be atomic
+# or racing leaders can overshoot the cap (ADVICE r14)
+_PROBE_BC_LOCK = threading.Lock()
+
+
+def pooled_broadcast(spark, payload):
+    """Broadcast a probe's per-call payload through the bounded pool."""
+    bc = spark.sparkContext.broadcast(payload)
+    evicted = []
+    with _PROBE_BC_LOCK:
+        _PROBE_BC_POOL.append(bc)
+        while len(_PROBE_BC_POOL) > _PROBE_BC_CAP:
+            evicted.append(_PROBE_BC_POOL.pop(0))
+    for old in evicted:  # unpersist outside the lock — it can block
+        try:
+            old.unpersist(False)
+        except Exception:
+            pass  # sc already stopped / broadcast gone — nothing to free
+    return bc
+
+
+def topk_canonical_idx(col: np.ndarray, ids: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(row, query) index pairs of the local top-k of an ascending-score
+    |B|×|Q| block under the canonical (score, vec_id ASC) order; the core
+    of topk_canonical for kernels that need positions, not a frame."""
+    n, nq = col.shape
+    k_eff = min(k, n)
+    kth = np.partition(col, k_eff - 1, axis=0)[k_eff - 1, :]
+    mask = (col <= kth[None, :]) & np.isfinite(col)
+    b_idx, q_idx = np.nonzero(mask)
+    counts = np.bincount(q_idx, minlength=nq)
+    over = np.nonzero(counts > k_eff)[0]
+    if over.size:
+        keep = np.ones(b_idx.shape[0], dtype=bool)
+        for j in over:
+            sel = np.nonzero(q_idx == j)[0]
+            rows = b_idx[sel]
+            order = np.lexsort((ids[rows], col[rows, j]))
+            keep[sel[order[k_eff:]]] = False
+        b_idx, q_idx = b_idx[keep], q_idx[keep]
+    return b_idx, q_idx
 
 
 def topk_canonical(
@@ -57,13 +152,13 @@ def topk_canonical(
     emit.
 
     Because the comparator is a total order shared with the final
-    per-query window, the local cut is globally safe even when a score
-    tie straddles the k boundary: the members kept locally (lowest
-    vec_ids within the tie) are precisely the ones the global ranking
-    would keep from this block. This closes BOTH kernel defects the
-    advisors flagged: the argpartition-only cut kept an ARBITRARY tie
-    member (ADVICE r15), and the tie-INCLUSIVE replacement emitted the
-    whole tie — unbounded on duplicate-heavy corpora, where a
+    per-query window (rank_topk), the local cut is globally safe even
+    when a score tie straddles the k boundary: the members kept locally
+    (lowest vec_ids within the tie) are precisely the ones the global
+    ranking would keep from this block. This closes BOTH kernel defects
+    the advisors flagged: the argpartition-only cut kept an ARBITRARY
+    tie member (ADVICE r15), and the tie-INCLUSIVE replacement emitted
+    the whole tie — unbounded on duplicate-heavy corpora, where a
     near-dup cluster made per-query emission O(cluster) instead of k
     (ADVICE r16). Vectorized: one column-partition for the kth scores,
     one mask + nonzero; a per-column lexsort runs ONLY over the rare
@@ -74,22 +169,7 @@ def topk_canonical(
     Scores should arrive pre-rounded when the ranking is defined on a
     rounded score (the knn_join / hybrid oracle discipline) so ties
     are exact equality on both engine and SQL sides."""
-    col = scores if ascending else -scores
-    n, nq = col.shape
-    k_eff = min(k, n)
-    kth = np.partition(col, k_eff - 1, axis=0)[k_eff - 1, :]
-    mask = (col <= kth[None, :]) & np.isfinite(col)
-    b_idx, q_idx = np.nonzero(mask)
-    counts = np.bincount(q_idx, minlength=nq)
-    over = np.nonzero(counts > k_eff)[0]
-    if over.size:
-        keep = np.ones(b_idx.shape[0], dtype=bool)
-        for j in over:
-            sel = np.nonzero(q_idx == j)[0]
-            rows = b_idx[sel]
-            order = np.lexsort((ids[rows], col[rows, j]))
-            keep[sel[order[k_eff:]]] = False
-        b_idx, q_idx = b_idx[keep], q_idx[keep]
+    b_idx, q_idx = topk_canonical_idx(scores if ascending else -scores, ids, k)
     return pd.DataFrame(
         {
             "q_id": q_ids[q_idx],
@@ -99,13 +179,21 @@ def topk_canonical(
     )
 
 
-def _topk_from_scores(
-    scores: np.ndarray, ids: np.ndarray, q_ids: np.ndarray, k: int, ascending: bool
-) -> pd.DataFrame:
-    """Back-compat shim for the IVF/SQ8/ivf2 probe kernels — the
-    canonical cut with the historical (scores, ids, q_ids, k,
-    ascending) signature and 'dist' column."""
-    return topk_canonical(scores, ids, q_ids, k, ascending, score_col="dist")
+def rank_topk(
+    local: DataFrame, k: int, score_col: str = "dist", ascending: bool = True
+) -> DataFrame:
+    """The per-query rank tail of every top-k probe: (q_id, rank, vec_id,
+    score_col), rank 1..k under (score, vec_id ASC). The row_number +
+    rank filter shape is what Catalyst turns into a map-side
+    WindowGroupLimit (pinned in tests/test_plans.py), so only the
+    partial top-k of each partition reaches the exchange."""
+    score = F.col(score_col).asc() if ascending else F.col(score_col).desc()
+    w = Window.partitionBy("q_id").orderBy(score, F.col("vec_id").asc())
+    return (
+        local.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "rank", "vec_id", score_col)
+    )
 
 
 def squared_l2_block(B: np.ndarray, Q: np.ndarray) -> np.ndarray:
@@ -157,7 +245,7 @@ def _topk_per_query(
         raise ValueError(f"unknown metric {metric}")
     if score_round is not None:
         np.round(scores, score_round, out=scores)
-    return _topk_from_scores(scores, ids, q_ids, k, ascending)
+    return topk_canonical(scores, ids, q_ids, k, ascending)
 
 
 def knn_exact(
@@ -181,10 +269,8 @@ def knn_exact(
     twin ranks on a rounded score (the hybrid RRF vector leg).
     """
     spark = base.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    bc = spark.sparkContext.broadcast((q_ids, Q))
+    q_ids, Q = query_block(queries, vec_col)
+    bc = pooled_broadcast(spark, (q_ids, Q))
 
     # Map-stage width rule (r17): byte-based file splitting never widens
     # a small base (a 2,000-row fixture table is one ~1 MB parquet split),
@@ -213,16 +299,7 @@ def knn_exact(
             yield _topk_per_query(B, ids, bQ, bq_ids, k, metric, score_round)
 
     local = base.select(F.col(id_col), F.col(vec_col)).mapInPandas(kernel, _KNN_SCHEMA)
-    order = [F.col("dist").asc(), F.col("vec_id").asc()] if metric == "l2" else [
-        F.col("dist").desc(),
-        F.col("vec_id").asc(),
-    ]
-    w = Window.partitionBy("q_id").orderBy(*order)
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k, ascending=metric == "l2")
 
 
 def knn_exact_expr(
@@ -238,17 +315,10 @@ def knn_exact_expr(
     b = base.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_b_emb"))
     if metric == "l2":
         dist = squared_l2("_q_emb", "_b_emb")
-        order = [F.col("dist").asc(), F.col("vec_id").asc()]
     else:
         dist = cosine_similarity("_q_emb", "_b_emb")
-        order = [F.col("dist").desc(), F.col("vec_id").asc()]
     scored = b.crossJoin(F.broadcast(q)).select("q_id", "vec_id", dist.alias("dist"))
-    w = Window.partitionBy("q_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(scored, k, ascending=metric == "l2")
 
 
 def hard_negatives(
@@ -280,16 +350,8 @@ def hard_negatives(
     kept = cand.filter(
         (F.col("vec_id") != F.col("q_id")) & (F.col("dist") <= max_cos)
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").desc(), F.col("vec_id").asc())
-    return (
-        kept.withColumn("new_rank", F.row_number().over(w))
-        .filter(F.col("new_rank") <= k)
-        .select(
-            "q_id",
-            F.col("new_rank").alias("rank"),
-            "vec_id",
-            F.round(F.col("dist"), 6).alias("cos_sim"),
-        )
+    return rank_topk(kept, k, ascending=False).select(
+        "q_id", "rank", "vec_id", F.round(F.col("dist"), 6).alias("cos_sim")
     )
 
 

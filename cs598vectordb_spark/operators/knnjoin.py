@@ -39,7 +39,7 @@ rounded to 6 dp BEFORE any ranking (local cell top-k and the final
 window use the same (rounded score, vec_id) comparator as the SQL
 twin), so a last-ulp float64 summation difference between numpy and
 DuckDB cannot flip an order — and the LOCAL cut applies that CANONICAL
-comparator to emit exactly k rows per query (_topk_canonical): with a
+comparator to emit exactly k rows per query (knn.topk_canonical): with a
 shared total order, the tie members the local cut keeps (lowest
 vec_ids) are exactly the ones the final window would rank, so
 determinism needs no tie-inclusive over-emission. History: an
@@ -65,11 +65,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import SEED  # noqa: F401  (seed parity with index builders)
 from cs598vectordb_spark.operators.index import IvfIndex, build_ivf_index
+from cs598vectordb_spark.operators.knn import rank_topk, squared_l2_block, topk_canonical
 
 COS_ROUND = 6  # shared with the DuckDB twin; see module docstring
 
@@ -85,30 +86,6 @@ def default_join_nlist(n_rows: int) -> int:
 
 def _unit_rows(X: np.ndarray) -> np.ndarray:
     return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
-
-
-def _topk_canonical(
-    scores: np.ndarray,
-    ids: np.ndarray,
-    q_ids: np.ndarray,
-    k: int,
-    ascending: bool,
-    score_col: str,
-) -> pd.DataFrame:
-    """Local cell cut: EXACTLY k rows per query under the canonical
-    (score, vec_id ASC) comparator — the shared kernel in
-    operators/knn.py (topk_canonical). Scores arrive pre-rounded
-    (cosine) so ties are exact equality and the local comparator IS
-    the final window's comparator; boundary ties resolve to the lowest
-    vec_ids locally, which is precisely what the global ranking keeps
-    from this cell. This replaces the r16 tie-INCLUSIVE cut, whose
-    per-query emission degraded from ~k to the whole duplicate cluster
-    on near-dup-heavy corpora — the join's stated target — inflating
-    the candidate shuffle (ADVICE r16). Masked rows (±inf from
-    exclude_self) never emit."""
-    from cs598vectordb_spark.operators.knn import topk_canonical
-
-    return topk_canonical(scores, ids, q_ids, k, ascending, score_col)
 
 
 def assign_queries_ivf(
@@ -288,8 +265,6 @@ def knn_join_ivf(
         empty = pd.DataFrame({"q_id": [], "vec_id": [], score_col: []})
         if len(qpdf) == 0 or len(bpdf) == 0:
             return empty
-        from cs598vectordb_spark.operators.knn import squared_l2_block
-
         q_ids_all = qpdf["q_id"].to_numpy(dtype=np.int64)
         b_ids = bpdf["vec_id"].to_numpy(dtype=np.int64)
         B = np.stack(bpdf[vec_col].to_numpy()).astype(np.float64)
@@ -321,8 +296,10 @@ def knn_join_ivf(
                 scores = np.round(squared_l2_block(B, Q), COS_ROUND)
             if exclude_self:
                 scores[b_ids[:, None] == q_ids[None, :]] = bad
+            # local cell cut: exactly k rows per query under the canonical
+            # (score, vec_id) order the final window shares
             outs.append(
-                _topk_canonical(
+                topk_canonical(
                     scores, b_ids, q_ids, k,
                     ascending=not cosine, score_col=score_col,
                 )
@@ -345,17 +322,7 @@ def knn_join_ivf(
         lambda qp, bp: cell_kernel(qp, bp),
         f"q_id long, vec_id long, {score_col} double",
     )
-    order = (
-        [F.col(score_col).desc(), F.col("vec_id").asc()]
-        if cosine
-        else [F.col(score_col).asc(), F.col("vec_id").asc()]
-    )
-    w = Window.partitionBy("q_id").orderBy(*order)
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", score_col)
-    )
+    return rank_topk(local, k, score_col, ascending=not cosine)
 
 
 def knn_join(

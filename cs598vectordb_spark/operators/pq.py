@@ -22,11 +22,17 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K, SEED
 from cs598vectordb_spark.operators.index import _kmeans_fit
+from cs598vectordb_spark.operators.knn import (
+    pooled_broadcast,
+    query_block,
+    rank_topk,
+    topk_canonical,
+)
 
 _CODE_SCHEMA = "vec_id long, codes array<int>"
 
@@ -150,11 +156,9 @@ def knn_pq(
 ) -> DataFrame:
     """ADC top-k over the encoded table: per partition, distances are m
     gathers into the per-query lookup tables; only local top-k rows reach
-    the shuffle."""
-    spark = codes.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
+    the shuffle. The local cut is the canonical (dist, vec_id) one, so
+    small-ksub code ties resolve identically under any partitioning."""
+    q_ids, Q = query_block(queries, vec_col)
     books = cb.codebooks
     m, dsub = cb.m, books.shape[2]
     # (nq, m, ksub) query→sub-centroid distance tables
@@ -167,13 +171,10 @@ def knn_pq(
         ],
         axis=1,
     )
-    bc = spark.sparkContext.broadcast((q_ids, T))
+    bc = pooled_broadcast(codes.sparkSession, (q_ids, T))
 
     def kern(batches):
-        import pandas as pd
-
         bq_ids, bT = bc.value
-        nq = len(bq_ids)
         for pdf in batches:
             n = len(pdf)
             if not n:
@@ -181,34 +182,13 @@ def knn_pq(
             C = np.stack(pdf["codes"].to_numpy())  # (n, m)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             # scores[q, i] = sum_j T[q, j, C[i, j]]
-            scores = np.zeros((nq, n))
+            scores = np.zeros((len(bq_ids), n))
             for j in range(m):
                 scores += bT[:, j, :][:, C[:, j]]
-            k_eff = min(k, n)
-            part = np.argpartition(scores, k_eff - 1, axis=1)[:, :k_eff]
-            out_q, out_id, out_d = [], [], []
-            for qi in range(nq):
-                cand = part[qi]
-                order = np.lexsort((ids[cand], scores[qi, cand]))
-                sel = cand[order]
-                out_q.append(np.full(k_eff, bq_ids[qi], dtype=np.int64))
-                out_id.append(ids[sel])
-                out_d.append(scores[qi, sel])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "vec_id": np.concatenate(out_id),
-                    "dist": np.concatenate(out_d),
-                }
-            )
+            yield topk_canonical(scores.T, ids, bq_ids, k, True)
 
     local = codes.mapInPandas(kern, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)
 
 
 def knn_pq_refined(
@@ -236,9 +216,4 @@ def knn_pq_refined(
         .join(F.broadcast(qv), "q_id")
         .select("q_id", "vec_id", squared_l2("_q_emb", "_b_emb").alias("dist"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(scored, k)

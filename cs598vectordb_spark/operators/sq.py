@@ -22,10 +22,18 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cs598vectordb_spark.config import DEFAULT_K
+from cs598vectordb_spark.operators.knn import (
+    nearest_lists,
+    pooled_broadcast,
+    query_block,
+    rank_topk,
+    squared_l2_block,
+    topk_canonical,
+)
 
 # guards a zero range on constant dimensions; mirrored in the oracle SQL
 _EPS = 1e-12
@@ -183,22 +191,13 @@ def knn_ivf_sq(
     centroids' int8 codes, batch reconstruction + masked GEMM in one
     kernel (no joins), local top-k, tiny shuffle — knn_ivf's plan over
     4×-smaller bytes."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
+    from cs598vectordb_spark.operators.index import probe_mask
 
-    spark = queries.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    C = index.centroids
-    d2 = (
-        np.square(Q).sum(1, keepdims=True) - 2.0 * (Q @ C.T) + np.square(C).sum(1)[None, :]
+    q_ids, Q = query_block(queries, vec_col)
+    probed, probe_set = probe_mask(nearest_lists(Q, index.centroids, nprobe), index.nlist)
+    bc = pooled_broadcast(
+        queries.sparkSession, (q_ids, Q, probed, index.codec.mins, index.codec.ranges)
     )
-    nearest = np.argsort(d2, axis=1)[:, :nprobe]
-    probed = np.zeros((index.nlist, len(q_ids)), dtype=bool)
-    for j, row in enumerate(nearest):
-        probed[row, j] = True
-    probe_set = sorted({int(c) for row in nearest for c in row})
-    bc = spark.sparkContext.broadcast((q_ids, Q, probed, index.codec.mins, index.codec.ranges))
 
     def kern(batches):
         bq_ids, bQ, bprobed, mins, rng = bc.value
@@ -210,7 +209,7 @@ def knn_ivf_sq(
             B = mins[None, :] + codes / 255.0 * rng[None, :]
             scores = squared_l2_block(B, bQ)
             scores[~bprobed[pdf["centroid_id"].to_numpy(dtype=np.int64)]] = np.inf
-            out = _topk_from_scores(scores, ids, bq_ids, k, True)
+            out = topk_canonical(scores, ids, bq_ids, k, True)
             if len(out):
                 yield out
 
@@ -219,12 +218,7 @@ def knn_ivf_sq(
         .select(id_col, "codes", "centroid_id")
         .mapInPandas(kern, "q_id long, vec_id long, dist double")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)
 
 
 def knn_sq(
@@ -239,13 +233,8 @@ def knn_sq(
     (one broadcast of the 2·dim codec floats) and runs the same GEMM /
     local-top-k shape as knn_exact — the scan reads 1-byte codes, full
     floats never leave the codec."""
-    from cs598vectordb_spark.operators.knn import _topk_from_scores, squared_l2_block
-
-    spark = codes.sparkSession
-    qpdf = queries.select("q_id", vec_col).toPandas()
-    q_ids = qpdf["q_id"].to_numpy(dtype=np.int64)
-    Q = np.ascontiguousarray(np.stack(qpdf[vec_col].to_numpy()), dtype=np.float64)
-    bc = spark.sparkContext.broadcast((q_ids, Q, codec.mins, codec.ranges))
+    q_ids, Q = query_block(queries, vec_col)
+    bc = pooled_broadcast(codes.sparkSession, (q_ids, Q, codec.mins, codec.ranges))
 
     def kern(batches):
         bq_ids, bQ, mins, rng = bc.value
@@ -255,14 +244,9 @@ def knn_sq(
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             C = np.stack(pdf["codes"].to_numpy()).astype(np.float64)
             B = mins[None, :] + C / 255.0 * rng[None, :]
-            out = _topk_from_scores(squared_l2_block(B, bQ), ids, bq_ids, k, True)
+            out = topk_canonical(squared_l2_block(B, bQ), ids, bq_ids, k, True)
             if len(out):
                 yield out
 
     local = codes.mapInPandas(kern, "q_id long, vec_id long, dist double")
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("vec_id").asc())
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "dist")
-    )
+    return rank_topk(local, k)

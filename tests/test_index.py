@@ -1224,3 +1224,90 @@ def test_kmeans_large_k_fast_path():
     small = X[:100]
     Cs = _kmeans_fit_large_k(small, _KMEANS_FAST_K, np.random.default_rng(1), 2)
     assert Cs.shape[0] == 100
+
+
+def test_layered2_walk_cut_is_canonical_under_ties(spark):
+    """The walk kernel's final cut breaks distance ties by vec_id: with
+    every vector stored 4x, each query's k-boundary falls inside a tie
+    of identical copies. Probing every segment with n_entry >= the
+    segment size scores every node, so the walk sees the whole base
+    and its rows must equal knn_exact's row for row — the copies kept
+    at the boundary are the lowest vec_ids, never arbitrary ones."""
+    import numpy as np
+
+    from cs598vectordb_spark.operators.graph import (
+        build_layered_graph2,
+        knn_graph_layered2,
+    )
+
+    rng = np.random.default_rng(11)
+    V = rng.standard_normal((40, 8)).astype("float32")
+    X = np.repeat(V, 4, axis=0)  # 160 rows, every vector 4x
+    base = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(len(X))],
+        "vec_id long, embedding array<float>",
+    ).repartition(3)
+    q = base.filter("vec_id % 20 = 1").selectExpr("vec_id as q_id", "embedding")
+    idx = build_layered_graph2(base, nlist1=2, nlist2=2, degree=8)
+    got = knn_graph_layered2(
+        idx, q, k=6, nprobe1=2, nprobe2=4, beam=8, rounds=1, n_entry=len(X)
+    ).collect()
+    want = knn_exact(base, q, k=6).collect()
+    idx.close()
+
+    def rows(rs):
+        return sorted((r.q_id, r.rank, r.vec_id) for r in rs)
+
+    assert len(want) == 8 * 6
+    assert rows(got) == rows(want)
+    dist = {(r.q_id, r.rank): r.dist for r in want}
+    assert all(r.dist == pytest.approx(dist[(r.q_id, r.rank)], abs=1e-9) for r in got)
+
+
+def test_probe_broadcasts_are_pooled(spark, sf_dir, tmp_path, monkeypatch):
+    """Every probe family broadcasts its query block through the one
+    bounded pool: past _PROBE_BC_CAP probes the pool still holds
+    exactly the CAP newest broadcasts, and each evicted one was
+    unpersisted — a long update or serving loop cannot accumulate
+    per-probe broadcasts."""
+    from pyspark.broadcast import Broadcast
+
+    from cs598vectordb_spark.operators import ivf2, ivfpq, knn, sq
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = queries_from_embeddings(emb, 5)
+    ivf = build_ivf_index(emb, nlist=8)
+    ivf_sq = sq.build_ivf_sq(emb, str(tmp_path / "ivfsq"), nlist=8)
+    two = ivf2.build_ivf2_index(emb, nlist1=4, nlist2=2)
+    pq_idx = ivfpq.build_ivfpq(emb, nlist=8, m=8, ksub=16, keep_vectors=True)
+    probes = [
+        lambda: knn_ivf(ivf, q, k=K, nprobe=2),
+        lambda: sq.knn_ivf_sq(ivf_sq, q, k=K, nprobe=2),
+        lambda: ivf2.knn_ivf2(two, q, k=K, nprobe1=2, nprobe2=2),
+        lambda: ivfpq.knn_ivfpq_refined(pq_idx, None, q, k=K, nprobe=2),
+        lambda: knn_exact(emb, q, k=K),
+    ]
+    unpersisted = []
+    real = Broadcast.unpersist
+
+    def spy(self, blocking=False):
+        unpersisted.append(self)
+        return real(self, blocking)
+
+    monkeypatch.setattr(Broadcast, "unpersist", spy)
+    created = []
+    for i in range(knn._PROBE_BC_CAP + 3):
+        before = list(knn._PROBE_BC_POOL)
+        probes[i % len(probes)]()
+        new = [b for b in knn._PROBE_BC_POOL if not any(b is o for o in before)]
+        assert len(new) == 1, "each probe pools exactly one query broadcast"
+        created.append(new[0])
+    pool = knn._PROBE_BC_POOL
+    assert len(pool) == knn._PROBE_BC_CAP
+    assert all(any(b is p for p in pool) for b in created[3:])
+    for old in created[:3]:
+        assert not any(old is p for p in pool)
+        assert any(old is u for u in unpersisted), "evicted broadcast not unpersisted"
+    pq_idx.close()
+    two.assigned.unpersist()
+    two.l2_table.unpersist()

@@ -185,7 +185,7 @@ def test_topk_canonical_kernel_edges():
     would keep from this block), masked (±inf) rows never emit, a
     column with fewer finite rows than k emits only its finite rows,
     and per-query emission never exceeds k."""
-    from cs598vectordb_spark.operators.knnjoin import _topk_canonical
+    from cs598vectordb_spark.operators.knn import topk_canonical
 
     ids = np.array([5, 3, 9, 1, 7], dtype=np.int64)
     q_ids = np.array([100, 200], dtype=np.int64)
@@ -200,7 +200,7 @@ def test_topk_canonical_kernel_edges():
             [0.1, 0.3],
         ]
     )
-    out = _topk_canonical(scores, ids, q_ids, k=2, ascending=False,
+    out = topk_canonical(scores, ids, q_ids, k=2, ascending=False,
                           score_col="cos_sim")
     got = {
         (int(r.q_id), int(r.vec_id), float(r.cos_sim))
@@ -220,7 +220,7 @@ def test_topk_canonical_kernel_edges():
     # ascending (L2) path: k larger than the finite row count emits
     # exactly the finite rows
     d = np.array([[1.0], [np.inf], [2.0]])
-    out2 = _topk_canonical(
+    out2 = topk_canonical(
         d, np.array([4, 5, 6], dtype=np.int64),
         np.array([1], dtype=np.int64), k=3, ascending=True,
         score_col="dist",
@@ -232,13 +232,13 @@ def test_topk_canonical_duplicate_cluster_emission_bounded():
     """ADVICE r16's failure scenario directly: a duplicate cluster far
     wider than k (12 copies tie at rounded score 1.0) must emit
     exactly k rows per query — the lowest vec_ids — not the cluster."""
-    from cs598vectordb_spark.operators.knnjoin import _topk_canonical
+    from cs598vectordb_spark.operators.knn import topk_canonical
 
     n = 12
     ids = np.arange(n, dtype=np.int64)[::-1].copy()  # ids 11..0
     q_ids = np.array([7], dtype=np.int64)
     scores = np.ones((n, 1))
-    out = _topk_canonical(scores, ids, q_ids, k=3, ascending=False,
+    out = topk_canonical(scores, ids, q_ids, k=3, ascending=False,
                           score_col="cos_sim")
     assert len(out) == 3
     assert sorted(out.vec_id) == [0, 1, 2]

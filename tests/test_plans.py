@@ -77,10 +77,52 @@ def test_lsh_probe_is_broadcast_join(spark, emb_q):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_topk_uses_window_group_limit(spark, emb_q):
+def _probe_on_rank_tail(name, emb, q, tmp_path):
+    """Build the smallest index `name` probes and return its top-k frame."""
+    from cs598vectordb_spark.operators import graph, ivf2, ivfpq, pq, sq
+
+    if name == "knn_exact":
+        return knn_exact(emb, q, k=DEFAULT_K)
+    if name == "knn_ivf":
+        return knn_ivf(build_ivf_index(emb, nlist=8), q, k=DEFAULT_K, nprobe=3)
+    if name == "knn_ivf_sq":
+        idx = sq.build_ivf_sq(emb, str(tmp_path / "ivfsq"), nlist=8)
+        return sq.knn_ivf_sq(idx, q, k=DEFAULT_K, nprobe=3)
+    if name == "knn_ivf2":
+        idx = ivf2.build_ivf2_index(emb, nlist1=4, nlist2=2)
+        return ivf2.knn_ivf2(idx, q, k=DEFAULT_K, nprobe1=2, nprobe2=4)
+    if name == "knn_pq":
+        cb = pq.train_pq(emb, m=8, ksub=16)
+        return pq.knn_pq(pq.pq_encode(emb, cb), cb, q, k=DEFAULT_K)
+    if name == "knn_ivfpq":
+        idx = ivfpq.build_ivfpq(emb, nlist=8, m=8, ksub=16)
+        return ivfpq.knn_ivfpq(idx, q, k=DEFAULT_K, nprobe=3)
+    if name == "knn_ivfpq_refined":
+        idx = ivfpq.build_ivfpq(emb, nlist=8, m=8, ksub=16, keep_vectors=True)
+        return ivfpq.knn_ivfpq_refined(idx, None, q, k=DEFAULT_K, nprobe=3)
+    idx = graph.build_layered_graph2(emb, 4, 4, degree=8)
+    return graph.knn_graph_layered2(idx, q, k=DEFAULT_K)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_exact",
+        "knn_ivf",
+        "knn_ivf_sq",
+        "knn_ivf2",
+        "knn_pq",
+        "knn_ivfpq",
+        "knn_ivfpq_refined",
+        "knn_graph_layered2",
+    ],
+)
+def test_topk_uses_window_group_limit(spark, emb_q, tmp_path, name):
+    """Every probe ends in the shared rank tail (knn.rank_topk), so every
+    plan keeps the map-side partial top-k before the exchange: only
+    |parts|*|Q|*k rows shuffle."""
     emb, q = emb_q
-    plan = plan_of(knn_exact(emb, q, k=DEFAULT_K))
-    # map-side partial top-k before the exchange: only |parts|*|Q|*k rows shuffle
+    plan = plan_of(_probe_on_rank_tail(name, emb, q, tmp_path))
     assert "WindowGroupLimit" in plan, plan
 
 

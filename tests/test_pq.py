@@ -101,17 +101,24 @@ def test_ivfpq_materialized_probe_matches_inmemory(spark, emb_q, tmp_path):
     mem.close()
 
 
-def test_ivfpq_topk_deterministic_under_ties(spark):
+@pytest.mark.parametrize("probe", ["knn_ivfpq", "knn_ivfpq_refined", "knn_pq"])
+def test_ivfpq_topk_deterministic_under_ties(spark, probe):
     """ADVICE r8: identical code vectors (here guaranteed — every vector
-    appears 4x) create ADC score ties at the k boundary; the emitted
-    top-k must be identical across different physical partitionings of
-    the code lists, with tied groups ordered by vec_id."""
+    appears 4x, and small ksub makes codes collide further) create score
+    ties at the k boundary; the emitted top-k must be identical across
+    different physical partitionings of the code table AND equal the
+    first k ranks of the full (score, vec_id) ranking — the canonical
+    local cut, never an arbitrary tie member. knn_ivfpq_refined runs on
+    a keep_vectors index (the fused kernel); its mult covers every row
+    of a list, so the ADC cut cannot make the answer layout-dependent
+    and the exact cut's ties (the 4 copies) decide the boundary."""
     import numpy as np
 
     from cs598vectordb_spark.operators.ivfpq import (
         IvfPqIndex,
         build_ivfpq,
         knn_ivfpq,
+        knn_ivfpq_refined,
     )
 
     rng = np.random.default_rng(3)
@@ -121,27 +128,44 @@ def test_ivfpq_topk_deterministic_under_ties(spark):
         [(i, X[i].tolist()) for i in range(len(X))],
         "vec_id long, embedding array<float>",
     ).repartition(4)
-    idx = build_ivfpq(base, nlist=4, m=4, ksub=4, train_sample=200)
     q = base.filter("vec_id < 8").selectExpr("vec_id as q_id", "embedding")
 
+    if probe == "knn_pq":
+        cb = train_pq(base, m=4, ksub=4, train_sample=200)
+        codes = pq_encode(base, cb)
+
+        def run(layout, k):
+            return knn_pq(layout, cb, q, k=k)
+    else:
+        idx = build_ivfpq(
+            base, nlist=4, m=4, ksub=4, train_sample=200,
+            keep_vectors=probe == "knn_ivfpq_refined",
+        )
+        codes = idx.codes
+
+        def run(layout, k):
+            shuffled = IvfPqIndex(layout, idx.centroids, idx.cb, idx.nlist, None)
+            if probe == "knn_ivfpq":
+                return knn_ivfpq(shuffled, q, k=k, nprobe=2)
+            return knn_ivfpq_refined(shuffled, None, q, k=k, nprobe=2, mult=len(X))
+
+    def ranked(df):
+        return sorted((r.q_id, r.rank, r.vec_id) for r in df.collect())
+
+    full = [r for r in ranked(run(codes, len(X))) if r[1] <= 6]
     outs = []
     for parts in (1, 7):
-        codes = idx.codes.repartition(parts).persist()
-        codes.count()
-        shuffled = IvfPqIndex(codes, idx.centroids, idx.cb, idx.nlist, None)
-        outs.append(
-            sorted(
-                (r.q_id, r.rank, r.vec_id)
-                for r in knn_ivfpq(shuffled, q, k=6, nprobe=2).collect()
-            )
-        )
-        codes.unpersist()
-    idx.close()
-    assert outs[0] == outs[1]
+        layout = codes.repartition(parts).persist()
+        layout.count()
+        outs.append(ranked(run(layout, 6)))
+        layout.unpersist()
+    codes.unpersist()
+    assert outs[0] == outs[1] == full
     # within each query, every rank 1..6 exactly once
     per_q = {}
     for qid, rank, _ in outs[0]:
         per_q.setdefault(qid, []).append(rank)
+    assert len(per_q) == 8
     assert all(sorted(v) == list(range(1, 7)) for v in per_q.values())
 
 

@@ -40,7 +40,7 @@ def test_batched_results_match_solo(spark, sf_dir):
         build_layered_graph2,
         knn_graph_layered2,
     )
-    from cs598vectordb_spark.operators.serving import layered2_probe_fn
+    from cs598vectordb_spark.operators.serving import probe_fn_for
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = build_layered_graph2(emb, 4, 4, degree=16)
@@ -64,8 +64,8 @@ def test_batched_results_match_solo(spark, sf_dir):
 
     gate = threading.Barrier(4)
     batcher = DynamicBatcher(
-        layered2_probe_fn(
-            spark, idx, k=5, nprobe1=2, nprobe2=6, beam=24
+        probe_fn_for(
+            spark, "graph2", idx, k=5, nprobe1=2, nprobe2=6, beam=24
         ),
         max_wait_ms=1500.0,
     )
@@ -154,6 +154,22 @@ def test_submit_rejects_out_of_range_q_ids():
     assert b.n_probe_calls == 0
 
 
+def test_empty_request_skips_probe():
+    """A zero-row request alone in the queue would lead an empty merged
+    batch, and every real probe fails to stack an empty query block;
+    submit() must answer it with an empty result frame and never call
+    the probe."""
+
+    def never(qpdf):
+        raise AssertionError("probe called for an empty request")
+
+    b = DynamicBatcher(never, max_wait_ms=1.0)
+    out = b.submit(pd.DataFrame({"q_id": [], "embedding": []}))
+    assert list(out.columns) == ["q_id", "rank", "vec_id", "dist"]
+    assert len(out) == 0
+    assert b.n_probe_calls == 0
+
+
 def test_batched_ivfpq_matches_solo(spark, sf_dir):
     """The family-generalized batcher (r15): 4 concurrent tenants with
     DISJOINT query frames through one batcher over a real FUSED IVF-PQ
@@ -167,7 +183,7 @@ def test_batched_ivfpq_matches_solo(spark, sf_dir):
         build_ivfpq,
         knn_ivfpq_refined,
     )
-    from cs598vectordb_spark.operators.serving import ivfpq_probe_fn
+    from cs598vectordb_spark.operators.serving import probe_fn_for
 
     emb = load_table(spark, sf_dir, "embeddings")
     idx = build_ivfpq(emb, nlist=8, m=8, ksub=16, keep_vectors=True)
@@ -185,7 +201,7 @@ def test_batched_ivfpq_matches_solo(spark, sf_dir):
 
     gate = threading.Barrier(4)
     batcher = DynamicBatcher(
-        ivfpq_probe_fn(spark, idx, emb, **kw), max_wait_ms=1500.0
+        probe_fn_for(spark, "ivfpq", idx, emb, **kw), max_wait_ms=1500.0
     )
 
     def tenant(t: int):
