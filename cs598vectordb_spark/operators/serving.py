@@ -141,8 +141,10 @@ class DynamicBatcher:
             f["q_id"] = f["q_id"].astype(np.int64) + slot * _SLOT_STRIDE
             frames.append(f)
         merged = pd.concat(frames, ignore_index=True)
-        try:
+        with self._lock:
+            # two leaders probe at once when a wave arrives mid-probe
             self.n_probe_calls += 1
+        try:
             res = self._probe(merged)
             slot_of = (res["q_id"].to_numpy(np.int64) // _SLOT_STRIDE).astype(
                 np.int64

@@ -47,6 +47,9 @@ def get_spark(app_name: str = "cs598vectordb_spark", cpus: int | None = None) ->
         # exact kNN uses an explicit crossJoin(broadcast(queries)); keep the
         # guard rails on for everything else.
         .config("spark.sql.crossJoin.enabled", "true")
+        # workers fork from a daemon that stops each task re-reading
+        # pyspark.zip's directory (see worker_daemon)
+        .config("spark.python.daemon.module", "cs598vectordb_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -9,6 +9,9 @@ from __future__ import annotations
 
 import ast
 import importlib
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
@@ -64,3 +67,25 @@ def test_entry_script_package_imports_resolve(script):
         if not _resolves(module, name)
     ]
     assert not missing, missing
+
+
+def test_worker_daemon_imports_as_spark_workers_see_it(tmp_path):
+    """Spark starts the worker daemon as `python -m` with the repository
+    on PYTHONPATH and a working directory of its own. A daemon module
+    that fails to import there breaks every Python UDF job with an
+    opaque "Python daemon failed to launch", and importing it must not
+    start a JVM."""
+    code = (
+        "import cs598vectordb_spark.worker_daemon, pyspark; "
+        "assert pyspark.SparkContext._active_spark_context is None"
+    )
+    env = {**os.environ, "PYTHONPATH": str(ROOT)}
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr

@@ -6,6 +6,8 @@ and a probe failure must wake every waiter."""
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 import pytest
 
@@ -168,6 +170,48 @@ def test_empty_request_skips_probe():
     assert list(out.columns) == ["q_id", "rank", "vec_id", "dist"]
     assert len(out) == 0
     assert b.n_probe_calls == 0
+
+
+def test_probe_call_count_is_exact_under_concurrent_leaders():
+    """A wave that arrives during a probe elects a second leader, so
+    probes overlap; n_probe_calls (read by the serving metrics) must
+    still count every probe, with no increment lost to the race."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    calls = in_flight = max_in_flight = 0
+    calls_lock = threading.Lock()
+
+    def slow_probe(qpdf):
+        nonlocal calls, in_flight, max_in_flight
+        with calls_lock:
+            calls += 1
+            in_flight += 1
+            max_in_flight = max(max_in_flight, in_flight)
+        time.sleep(0.005)
+        with calls_lock:
+            in_flight -= 1
+        return _fake_probe(qpdf)
+
+    b = DynamicBatcher(slow_probe, max_wait_ms=0.0)
+    frames = [
+        pd.DataFrame({"q_id": [i], "embedding": [[float(i)]]})
+        for i in range(400)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=32) as pool:
+            futs = [pool.submit(b.submit, f) for f in frames]
+            got = [fut.result(timeout=120) for fut in futs]
+    finally:
+        sys.setswitchinterval(old)
+    for i, g in enumerate(got):
+        assert list(g["vec_id"]) == [i * 10 + 7]
+    assert b.n_submits == len(frames)
+    assert max_in_flight >= 2  # leaders did overlap
+    assert b.n_probe_calls == calls
 
 
 def test_batched_ivfpq_matches_solo(spark, sf_dir):
